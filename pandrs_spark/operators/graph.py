@@ -18,6 +18,11 @@ iteration is one shuffle. Scale posture:
 - lineage is cut with ``localCheckpoint`` every few iterations so plans
   don't grow unboundedly (the classic iterative-Spark failure mode);
 - convergence checks (``count`` on changed rows) are cheap aggregations.
+
+The five fixed-round power methods run on one driver,
+``_fixed_rounds``, which owns their last-round max-|Δ| certificate;
+``bfs_hops`` and ``closeness_centrality`` share one frontier loop,
+``_bfs``. The other loops keep their own measured truncation policies.
 """
 
 from __future__ import annotations
@@ -135,17 +140,14 @@ def connected_components(
     """
     und0 = tracked_persist(symmetrize(edges, src, dst))
     converged = False
-    labels = (
+    labels = tracked_persist(
         und0.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
-        .persist()
     )
     # materialize, then right-size the edge table every round re-scans
     labels.count()
     und = right_size_keyed(und0, "src")
-    if und is not und0:
-        und = tracked_persist(und)
     for i in range(max_iter):
         # neighbor labels: for each dst, min label of its srcs
         neighbor = (
@@ -216,6 +218,126 @@ def connected_components(
     return labels
 
 
+def _raise_if_moved(op, what, delta, tol, iterations, advice="raise iterations"):
+    """The last-round certificate of the fixed-round methods: raise
+    :class:`ConvergenceError` if max |Δ``what``| = ``delta`` > ``tol``."""
+    if delta is not None and delta > tol:
+        raise ConvergenceError(
+            f"{op}: max |Δ{what}| = {delta:.3e} > tol={tol} after "
+            f"{iterations} iterations — {advice}"
+        )
+
+
+def _fixed_rounds(
+    op, x, step, iterations, check_convergence, tol, col, advice="raise iterations"
+) -> DataFrame:
+    """The one driver of the fixed-round power methods: run
+    ``iterations`` rounds of ``x = step(x)`` over an (id, ``col``)
+    vector and return the last iterate.
+
+    ``step`` owns its lineage truncation: the lazy-checkpoint and
+    :func:`_l2_normalize` placements were measured per operator
+    (OPTIMIZATION_r11.md). ``check_convergence=True`` compares the last
+    two iterates (one extra |V|-row join + aggregate, only when the
+    flag is set) and raises if max |Δ``col``| > ``tol``.
+    """
+    prev = x
+    for _ in range(iterations):
+        prev, x = x, step(x)
+    if check_convergence and iterations > 0:
+        delta = (
+            x.alias("cur")
+            .join(prev.alias("p"), "id")
+            .agg(
+                F.max(F.abs(F.col(f"cur.{col}") - F.col(f"p.{col}"))).alias("d")
+            )
+            .first()["d"]
+        )
+        _raise_if_moved(op, col, delta, tol, iterations, advice)
+    return x
+
+
+def _vertices(e: DataFrame) -> DataFrame:
+    """Persisted distinct endpoint ids of an (src, dst) edge table."""
+    return tracked_persist(
+        e.select(F.col("src").alias("id"))
+        .union(e.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+
+
+def _walk(op, edges, src, dst, start, rank, iterations, check_convergence, tol):
+    """Random-walk power method shared by :func:`pagerank` and
+    :func:`personalized_pagerank`: ``start(n)`` is the initial rank
+    column and ``rank(n, dangling)`` the next round's rank over the
+    joined ``in_mass`` (``n`` vertices; ``dangling`` is the mass on
+    vertices without out-edges)."""
+    e = tracked_persist(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .distinct()
+        .repartition("src")
+    )
+    verts = _vertices(e)
+    n = verts.count()
+    # e and verts are materialized now, so cache stats are exact:
+    # right-size the loop-invariant tables that every round re-scans
+    # (provably-small graphs stop paying shuffle.partitions-wide cache
+    # scans per round on a default session; big graphs unchanged).
+    verts = right_size_keyed(verts, "id")
+    outdeg = tracked_persist(
+        e.groupBy("src").agg(F.count("*").alias("outdeg"))
+    )
+    # Dangling handling costs one extra driver action per iteration;
+    # detect up front whether any vertex lacks out-edges (never true for
+    # symmetrized graphs) and skip the per-round reduction when possible.
+    has_dangling = (
+        verts.join(outdeg.withColumnRenamed("src", "id"), "id", "left_anti")
+        .limit(1)
+        .count()
+        > 0
+    )
+    # The edges ⋈ outdeg join is loop-invariant — materialize it once
+    # instead of re-joining every iteration (round 11: at 20 iterations
+    # this removes 20 joins' worth of stages and driver re-planning;
+    # the division stays rank/outdeg inside the loop, so the float
+    # arithmetic is unchanged).
+    ew = right_size_keyed(e.join(outdeg, "src"), "src")
+
+    def step(ranks: DataFrame) -> DataFrame:
+        contribs = (
+            ew.join(ranks.withColumnRenamed("id", "src"), "src")
+            .select("dst", (F.col("rank") / F.col("outdeg")).alias("contrib"))
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("contrib").alias("in_mass"))
+        )
+        # mass sitting on dangling vertices (no out-edges) this round
+        if has_dangling:
+            dangling = (
+                ranks.join(outdeg.withColumnRenamed("src", "id"), "id", "left_anti")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
+                .first()[0]
+            )
+        else:
+            dangling = 0.0
+        ranks = verts.join(contribs, "id", "left").select(
+            "id", rank(n, dangling).alias("rank")
+        )
+        # Lineage grows linearly (ranks is referenced once per round),
+        # so per-round LAZY truncation keeps every catalyst plan one
+        # round deep while deferring execution: the chain of pending
+        # checkpoint RDDs forms a DAG that the first downstream action
+        # computes in one submission instead of one eager
+        # (AQE-multiplied) job per window — q68 at sf0.1: 109 scheduled
+        # jobs -> single-digit, wall 24 s -> (see OPTIMIZATION_r11.md).
+        # The |V|-row rank vector is tiny at any scale.
+        return ranks.localCheckpoint(eager=False)
+
+    return _fixed_rounds(
+        op, verts.withColumn("rank", start(n)), step, iterations,
+        check_convergence, tol, "rank",
+    )
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -238,95 +360,16 @@ def pagerank(
     :class:`ConvergenceError` if max |Δrank| > ``tol`` (one extra
     |V|-row join + aggregate, only when the flag is set).
     """
-    e = tracked_persist(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .repartition("src")
-    )
-    verts = tracked_persist(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    n = verts.count()
-    # e and verts are materialized now, so cache stats are exact:
-    # right-size the loop-invariant tables that every round re-scans
-    # (provably-small graphs stop paying shuffle.partitions-wide cache
-    # scans per round on a default session; big graphs unchanged).
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
-    outdeg = tracked_persist(
-        e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    )
-    # Dangling handling costs one extra driver action per iteration;
-    # detect up front whether any vertex lacks out-edges (never true for
-    # symmetrized graphs) and skip the per-round reduction when possible.
-    has_dangling = (
-        verts.join(outdeg.withColumnRenamed("src", "id"), "id", "left_anti")
-        .limit(1)
-        .count()
-        > 0
-    )
-    # The edges ⋈ outdeg join is loop-invariant — materialize it once
-    # instead of re-joining every iteration (round 11: at 20 iterations
-    # this removes 20 joins' worth of stages and driver re-planning;
-    # the division stays rank/outdeg inside the loop, so the float
-    # arithmetic is unchanged).
-    ew = tracked_persist(right_size_keyed(e.join(outdeg, "src"), "src"))
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    prev_ranks = ranks
-    for i in range(iterations):
-        contribs = (
-            ew.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("contrib"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("contrib").alias("in_mass"))
+
+    def rank(n, dangling):
+        return F.lit((1.0 - damping) / n) + F.lit(damping) * (
+            F.coalesce("in_mass", F.lit(0.0)) + F.lit(dangling / n)
         )
-        # mass sitting on dangling vertices (no out-edges) this round
-        if has_dangling:
-            dangling = (
-                ranks.join(outdeg.withColumnRenamed("src", "id"), "id", "left_anti")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                .first()[0]
-            )
-        else:
-            dangling = 0.0
-        ranks = verts.join(contribs, "id", "left").select(
-            "id",
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
-                * (F.coalesce("in_mass", F.lit(0.0)) + F.lit(dangling / n))
-            ).alias("rank"),
-        )
-        # Lineage grows linearly (ranks is referenced once per round),
-        # so per-round LAZY truncation keeps every catalyst plan one
-        # round deep while deferring execution: the chain of pending
-        # checkpoint RDDs forms a DAG that the first downstream action
-        # computes in one submission instead of one eager
-        # (AQE-multiplied) job per window — q68 at sf0.1: 109 scheduled
-        # jobs -> single-digit, wall 24 s -> (see OPTIMIZATION_r11.md).
-        # The |V|-row rank vector is tiny at any scale.
-        ranks = ranks.localCheckpoint(eager=False)
-        if check_convergence and i == iterations - 1:
-            delta = (
-                ranks.alias("cur")
-                .join(prev_ranks.alias("p"), "id")
-                .agg(
-                    F.max(
-                        F.abs(F.col("cur.rank") - F.col("p.rank"))
-                    ).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"pagerank: max |Δrank| = {delta:.3e} > tol={tol} "
-                    f"after {iterations} iterations — raise iterations"
-                )
-        prev_ranks = ranks
-    return ranks
+
+    return _walk(
+        "pagerank", edges, src, dst, lambda n: F.lit(1.0 / n), rank,
+        iterations, check_convergence, tol,
+    )
 
 
 def personalized_pagerank(
@@ -348,95 +391,68 @@ def personalized_pagerank(
     standard relevance/recommendation primitive: rank = probability a
     restarted random walker stands at v.
 
-    Same scale shape as pagerank: edges deduped, partitioned once on
-    src and persisted; each round shuffles only the |V|-row rank
-    vector; lineage cut per iteration with localCheckpoint.
+    Same scale shape as pagerank (the two share one walk core): edges
+    deduped, partitioned once on src and persisted; each round shuffles
+    only the |V|-row rank vector; lineage cut per iteration with
+    localCheckpoint.
 
     ``check_convergence=True`` certifies the fixed-round answer the same
     way :func:`pagerank` does: after the last round it raises
     :class:`ConvergenceError` if max |Δrank| > ``tol``.
     """
-    e = tracked_persist(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .repartition("src")
-    )
-    verts = tracked_persist(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    # materialize so cache stats are exact, then right-size the tables
-    # the loop re-scans every round (no-op above one task per core)
-    verts.count()
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
-    outdeg = tracked_persist(
-        e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    )
-    has_dangling = (
-        verts.join(outdeg.withColumnRenamed("src", "id"), "id", "left_anti")
-        .limit(1)
-        .count()
-        > 0
-    )
     is_seed = F.col("id") == F.lit(seed)
-    # loop-invariant edges ⋈ outdeg hoisted out of the loop (round 11,
-    # same change as pagerank — the division stays inside, float
-    # arithmetic unchanged)
-    ew = tracked_persist(right_size_keyed(e.join(outdeg, "src"), "src"))
-    ranks = verts.withColumn(
-        "rank", F.when(is_seed, F.lit(1.0)).otherwise(F.lit(0.0))
+
+    def rank(n, dangling):
+        return F.when(
+            is_seed, F.lit(restart) + F.lit((1.0 - restart) * dangling)
+        ).otherwise(F.lit(0.0)) + F.lit(1.0 - restart) * F.coalesce(
+            "in_mass", F.lit(0.0)
+        )
+
+    return _walk(
+        "personalized_pagerank", edges, src, dst,
+        lambda n: F.when(is_seed, F.lit(1.0)).otherwise(F.lit(0.0)), rank,
+        iterations, check_convergence, tol,
     )
-    prev_ranks = ranks
-    for i in range(iterations):
-        contribs = (
-            ew.join(ranks.withColumnRenamed("id", "src"), "src")
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("contrib"))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("contrib").alias("in_mass"))
-        )
-        if has_dangling:
-            dangling = (
-                ranks.join(
-                    outdeg.withColumnRenamed("src", "id"), "id", "left_anti"
-                )
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                .first()[0]
+
+
+def _bfs(op, und0, visited, keys, max_iter, check_convergence) -> DataFrame:
+    """Frontier loop shared by :func:`bfs_hops` (``keys=[]``) and the
+    multi-source :func:`closeness_centrality` (``keys=["root"]``: all
+    roots' frontiers advance together) over the persisted symmetric
+    edge table ``und0``, from the persisted hop-0 rows ``visited``
+    (*keys, id, hops). Raises :class:`ConvergenceError` under
+    ``check_convergence`` if the frontier is still non-empty after
+    ``max_iter`` hops."""
+    # materialize, then right-size the edge table every hop re-scans
+    und0.count()
+    und = right_size_keyed(und0, "src")
+    frontier = visited
+    for hop in range(1, max_iter + 1):
+        neighbors = (
+            und.join(
+                frontier.withColumnRenamed("id", "src").select(*keys, "src"),
+                "src",
             )
-        else:
-            dangling = 0.0
-        ranks = verts.join(contribs, "id", "left").select(
-            "id",
-            (
-                F.when(
-                    is_seed,
-                    F.lit(restart) + F.lit((1.0 - restart) * dangling),
-                ).otherwise(F.lit(0.0))
-                + F.lit(1.0 - restart) * F.coalesce("in_mass", F.lit(0.0))
-            ).alias("rank"),
+            .select(*keys, F.col("dst").alias("id"))
+            .distinct()
         )
-        # per-round LAZY truncation: one-round-deep plans, single
-        # deferred materialization (round 11, same change as pagerank)
-        ranks = ranks.localCheckpoint(eager=False)
-        if check_convergence and i == iterations - 1:
-            delta = (
-                ranks.alias("cur")
-                .join(prev_ranks.alias("p"), "id")
-                .agg(
-                    F.max(F.abs(F.col("cur.rank") - F.col("p.rank"))).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"personalized_pagerank: max |Δrank| = {delta:.3e} > "
-                    f"tol={tol} after {iterations} iterations — raise "
-                    "iterations"
-                )
-        prev_ranks = ranks
-    return ranks
+        new_frontier = tracked_persist(
+            neighbors.join(visited, [*keys, "id"], "left_anti")
+            .withColumn("hops", F.lit(hop))
+        )
+        if new_frontier.limit(1).count() == 0:
+            return visited
+        visited = visited.union(new_frontier)
+        if hop % _CHECKPOINT_EVERY == 0:
+            visited = visited.localCheckpoint(eager=True)
+        frontier = new_frontier
+    if check_convergence:
+        raise ConvergenceError(
+            f"{op}: frontier still expanding after {max_iter} hops — "
+            "raise max_iter (diameter exceeds the budget)"
+        )
+    return visited
 
 
 def bfs_hops(
@@ -456,42 +472,12 @@ def bfs_hops(
     frontier is still non-empty when ``max_iter`` is exhausted (the BFS
     was truncated before exploring the reachable set)."""
     und0 = tracked_persist(symmetrize(edges, src, dst).repartition("src"))
-    spark = edges.sparkSession
     visited = tracked_persist(
-        spark.createDataFrame(
+        edges.sparkSession.createDataFrame(
             [(int(i), 0) for i in start_ids], "id bigint, hops int"
         )
     )
-    # materialize, then right-size the edge table every hop re-scans
-    und0.count()
-    und = right_size_keyed(und0, "src")
-    if und is not und0:
-        und = tracked_persist(und)
-    frontier = visited
-    converged = False
-    for hop in range(1, max_iter + 1):
-        neighbors = (
-            und.join(frontier.withColumnRenamed("id", "src").select("src"), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        new_frontier = tracked_persist(
-            neighbors.join(visited, "id", "left_anti")
-            .withColumn("hops", F.lit(hop))
-        )
-        if new_frontier.limit(1).count() == 0:
-            converged = True
-            break
-        visited = visited.union(new_frontier)
-        if hop % _CHECKPOINT_EVERY == 0:
-            visited = visited.localCheckpoint(eager=True)
-        frontier = new_frontier
-    if check_convergence and not converged:
-        raise ConvergenceError(
-            f"bfs_hops: frontier still expanding after {max_iter} hops — "
-            "raise max_iter (diameter exceeds the budget)"
-        )
-    return visited
+    return _bfs("bfs_hops", und0, visited, [], max_iter, check_convergence)
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -585,8 +571,6 @@ def label_propagation(
     # materialize, then right-size the edge table every round re-scans
     labels.count()
     und = right_size_keyed(und0, "dst")
-    if und is not und0:
-        und = tracked_persist(und)
     top1 = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("label"))
     for i in range(iterations):
         nbr = (
@@ -697,35 +681,10 @@ def closeness_centrality(
             F.col("id").alias("root"), F.col("id"), F.lit(0).alias("hops")
         )
     )
-    # materialize, then right-size the edge table every hop re-scans
-    und0.count()
-    und = right_size_keyed(und0, "src")
-    if und is not und0:
-        und = tracked_persist(und)
-    frontier = visited
-    converged = False
-    for hop in range(1, max_iter + 1):
-        neighbors = (
-            und.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-        )
-        new_frontier = tracked_persist(
-            neighbors.join(visited, ["root", "id"], "left_anti")
-            .withColumn("hops", F.lit(hop))
-        )
-        if new_frontier.limit(1).count() == 0:
-            converged = True
-            break
-        visited = visited.union(new_frontier)
-        if hop % _CHECKPOINT_EVERY == 0:
-            visited = visited.localCheckpoint(eager=True)
-        frontier = new_frontier
-    if check_convergence and not converged:
-        raise ConvergenceError(
-            f"closeness_centrality: multi-source BFS frontier still "
-            f"expanding after {max_iter} hops — raise max_iter"
-        )
+    visited = _bfs(
+        "closeness_centrality", und0, visited, ["root"], max_iter,
+        check_convergence,
+    )
     return visited.groupBy(F.col("root").alias("id")).agg(
         (F.count(F.lit(1)) - 1).alias("n_reached"),
         F.when(
@@ -783,15 +742,9 @@ def eigenvector_centrality(
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
     und = right_size_keyed(und0, "dst")
-    if und is not und0:
-        und = tracked_persist(und)
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
-    scores = verts.withColumn("score", F.lit(1.0))
-    scores = _l2_normalize(scores, "score")
-    prev_scores = scores
-    for i in range(iterations):
+    verts = right_size_keyed(verts, "id")
+
+    def step(scores: DataFrame) -> DataFrame:
         nbr_sum = (
             und.join(scores.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
@@ -800,26 +753,13 @@ def eigenvector_centrality(
         scores = verts.join(nbr_sum, "id", "left").select(
             "id", F.coalesce("score", F.lit(0.0)).alias("score")
         )
-        scores = _l2_normalize(scores, "score")
-        if check_convergence and i == iterations - 1:
-            delta = (
-                scores.alias("cur")
-                .join(prev_scores.alias("p"), "id")
-                .agg(
-                    F.max(
-                        F.abs(F.col("cur.score") - F.col("p.score"))
-                    ).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"eigenvector_centrality: max |Δscore| = {delta:.3e} "
-                    f"> tol={tol} after {iterations} iterations — raise "
-                    "iterations"
-                )
-        prev_scores = scores
-    return scores
+        return _l2_normalize(scores, "score")
+
+    return _fixed_rounds(
+        "eigenvector_centrality",
+        _l2_normalize(verts.withColumn("score", F.lit(1.0)), "score"),
+        step, iterations, check_convergence, tol, "score",
+    )
 
 
 def katz_centrality(
@@ -846,22 +786,13 @@ def katz_centrality(
         .distinct()
         .repartition("src")
     )
-    verts = tracked_persist(
-        e0.select(F.col("src").alias("id"))
-        .union(e0.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = _vertices(e0)
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
     e = right_size_keyed(e0, "src")
-    if e is not e0:
-        e = tracked_persist(e)
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
-    scores = verts.withColumn("score", F.lit(float(beta)))
-    prev_scores = scores
-    for i in range(iterations):
+    verts = right_size_keyed(verts, "id")
+
+    def step(scores: DataFrame) -> DataFrame:
         in_sum = (
             e.join(scores.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
@@ -875,26 +806,13 @@ def katz_centrality(
             ).alias("score"),
         )
         # per-round LAZY truncation (round 11, same change as pagerank)
-        scores = scores.localCheckpoint(eager=False)
-        if check_convergence and i == iterations - 1:
-            delta = (
-                scores.alias("cur")
-                .join(prev_scores.alias("p"), "id")
-                .agg(
-                    F.max(
-                        F.abs(F.col("cur.score") - F.col("p.score"))
-                    ).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"katz_centrality: max |Δscore| = {delta:.3e} > "
-                    f"tol={tol} after {iterations} iterations — raise "
-                    "iterations or lower alpha"
-                )
-        prev_scores = scores
-    return scores
+        return scores.localCheckpoint(eager=False)
+
+    return _fixed_rounds(
+        "katz_centrality", verts.withColumn("score", F.lit(float(beta))),
+        step, iterations, check_convergence, tol, "score",
+        advice="raise iterations or lower alpha",
+    )
 
 
 def hits(
@@ -919,19 +837,11 @@ def hits(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
     )
-    verts = tracked_persist(
-        e0.select(F.col("src").alias("id"))
-        .union(e0.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = _vertices(e0)
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
     e = right_size_keyed(e0, "src")
-    if e is not e0:
-        e = tracked_persist(e)
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
+    verts = right_size_keyed(verts, "id")
     hubs = verts.withColumn("hub", F.lit(1.0))
     auths = verts.withColumn("authority", F.lit(1.0))
     prev_hubs, prev_auths = hubs, auths
@@ -972,11 +882,7 @@ def hits(
                 )
                 .first()["d"]
             )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"hits: max |Δscore| = {delta:.3e} > tol={tol} after "
-                    f"{iterations} iterations — raise iterations"
-                )
+            _raise_if_moved("hits", "score", delta, tol, iterations)
         prev_hubs, prev_auths = hubs, auths
     return auths.join(hubs, "id")
 
@@ -1015,19 +921,11 @@ def shortest_paths(
         )
         .repartition("src")
     )
-    verts = tracked_persist(
-        e0.select(F.col("src").alias("id"))
-        .union(e0.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = _vertices(e0)
     # materialize, then right-size the per-round tables (round 11)
     verts.count()
     e = right_size_keyed(e0, "src")
-    if e is not e0:
-        e = tracked_persist(e)
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
+    verts = right_size_keyed(verts, "id")
     dist = verts.withColumn(
         "dist",
         F.when(F.col("id") == F.lit(source), F.lit(0).cast("long")).otherwise(
@@ -1035,19 +933,21 @@ def shortest_paths(
         ),
     )
     prev_dist = dist
-    for i in range(iterations):
-        cand = (
+
+    def relax(d: DataFrame) -> DataFrame:
+        # best candidate distance per vertex through one more edge
+        return (
             e.join(
-                dist.filter(F.col("dist").isNotNull()).withColumnRenamed(
-                    "id", "src"
-                ),
+                d.filter(F.col("dist").isNotNull()).withColumnRenamed("id", "src"),
                 "src",
             )
             .select(F.col("dst").alias("id"), (F.col("dist") + F.col("cost")).alias("cand"))
             .groupBy("id")
             .agg(F.min("cand").alias("cand"))
         )
-        dist = dist.join(cand, "id", "left").select(
+
+    for i in range(iterations):
+        dist = dist.join(relax(dist), "id", "left").select(
             "id",
             F.when(F.col("dist").isNull(), F.col("cand"))
             .when(F.col("cand").isNull(), F.col("dist"))
@@ -1074,22 +974,8 @@ def shortest_paths(
             break
     if check_convergence:
         # fixpoint certificate: one more relaxation must change nothing
-        final_cand = (
-            e.join(
-                prev_dist.filter(F.col("dist").isNotNull()).withColumnRenamed(
-                    "id", "src"
-                ),
-                "src",
-            )
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("dist") + F.col("cost")).alias("cand"),
-            )
-            .groupBy("id")
-            .agg(F.min("cand").alias("cand"))
-        )
         still_relaxing = (
-            prev_dist.join(final_cand, "id", "left")
+            prev_dist.join(relax(prev_dist), "id", "left")
             .filter(
                 F.col("cand").isNotNull()
                 & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
@@ -1478,7 +1364,7 @@ def louvain(
     deg = und.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("k_v")
     ).persist()
-    labels = deg.select("id", F.col("id").alias("community")).persist()
+    labels = tracked_persist(deg.select("id", F.col("id").alias("community")))
     top1 = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("community"))
     for r in range(iterations):
         tot = (
@@ -1936,25 +1822,18 @@ def weighted_pagerank(
         )
         .repartition("src")
     )
-    verts = tracked_persist(
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    verts = _vertices(e)
     n = verts.count()
     # materialized now — right-size the per-round tables (round 11)
-    rs = right_size_keyed(verts, "id")
-    if rs is not verts:
-        verts = tracked_persist(rs)
+    verts = right_size_keyed(verts, "id")
     outw = tracked_persist(
         e.groupBy("src").agg(F.sum("w").alias("wout"))
     )
     # loop-invariant edges ⋈ out-weight hoisted (round 11, same change
     # as pagerank — the rank·w/wout arithmetic stays inside the loop)
-    ew = tracked_persist(right_size_keyed(e.join(outw, "src"), "src"))
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    prev_ranks = ranks
-    for i in range(iterations):
+    ew = right_size_keyed(e.join(outw, "src"), "src")
+
+    def step(ranks: DataFrame) -> DataFrame:
         contribs = (
             ew.join(ranks.withColumnRenamed("id", "src"), "src")
             .select(
@@ -1972,21 +1851,9 @@ def weighted_pagerank(
             ).alias("rank"),
         )
         # per-round LAZY truncation (round 11, same change as pagerank)
-        ranks = ranks.localCheckpoint(eager=False)
-        if check_convergence and i == iterations - 1:
-            delta = (
-                ranks.alias("cur")
-                .join(prev_ranks.alias("p"), "id")
-                .agg(
-                    F.max(F.abs(F.col("cur.rank") - F.col("p.rank"))).alias("d")
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta > tol:
-                raise ConvergenceError(
-                    f"weighted_pagerank: max |Δrank| = {delta:.3e} > "
-                    f"tol={tol} after {iterations} iterations — raise "
-                    "iterations"
-                )
-        prev_ranks = ranks
-    return ranks
+        return ranks.localCheckpoint(eager=False)
+
+    return _fixed_rounds(
+        "weighted_pagerank", verts.withColumn("rank", F.lit(1.0 / n)),
+        step, iterations, check_convergence, tol, "rank",
+    )

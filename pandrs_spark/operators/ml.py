@@ -832,9 +832,7 @@ def local_outlier_factor(
     # data-sized ones are left to shuffle-partition/AQE sizing
     # (round 11).
     knn.count()
-    _rs = right_size_keyed(knn, "a_id")
-    if _rs is not knn:
-        knn = tracked_persist(_rs)
+    knn = right_size_keyed(knn, "a_id")
     kdist = knn.filter(F.col("rn") == k).select(F.col("a_id").alias("id"), F.col("d").alias("kd"))
     if method == "grid":
         # Exactness certificate, enforced where Catalyst cannot prune it

@@ -1501,9 +1501,7 @@ def q570(spark, sf_dir):
     from pandrs_spark.operators.util import right_size_keyed
 
     knn.count()
-    _rs = right_size_keyed(knn, "id_a")
-    if _rs is not knn:
-        knn = tracked_persist(_rs)
+    knn = right_size_keyed(knn, "id_a")
     rev = knn.select(F.col("id_a").alias("id_b"), F.col("id_b").alias("id_a"))
     mut = knn.join(rev, ["id_a", "id_b"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_mutual")

@@ -25,8 +25,9 @@ def spark():
     # parallelize: same pickle path, same schema inference and
     # verification, same row order (monotonically_increasing_id stays
     # ascending), one Python eval per action. Measured: trivial frame
-    # asserts 5 s -> 0.2 s. Test-session-only; library call sites use
-    # operators.util.small_local_df for the same reason.
+    # asserts 5 s -> 0.2 s. Test-session-only: while tests run it also
+    # covers the library's createDataFrame(list) call sites, which
+    # otherwise keep the default slicing (no library helper exists).
     from pyspark.sql import SparkSession
 
     orig_create = SparkSession.createDataFrame

@@ -9,7 +9,9 @@ when the fixpoint IS reached."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+import pandrs_spark.operators.graph as G
 from pandrs_spark.operators.graph import (
     ConvergenceError,
     connected_components,
@@ -140,3 +142,101 @@ def test_kcore_convergence_certificate(spark):
     )
     out = kcore(tri, k=2, n_iter=2, check_convergence=True).collect()
     assert len(out) == 3
+
+
+def _star(spark):
+    # hub 0 <-> leaves 1..7: every fixed-round method moves a lot on
+    # its first round
+    return spark.createDataFrame(
+        [(0, i) for i in range(1, 8)] + [(i, 0) for i in range(1, 8)],
+        "src bigint, dst bigint",
+    )
+
+
+def _both_ways_triangle(spark):
+    # regular graph: the uniform vector is already the fixpoint of
+    # (weighted) PageRank, eigenvector centrality and HITS
+    return spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (2, 1), (3, 2), (1, 3)],
+        "src bigint, dst bigint",
+    )
+
+
+def _seed_self_loop(spark):
+    # seed 0 only reaches itself: the walk starts at its fixpoint
+    return spark.createDataFrame(
+        [(0, 0), (1, 2), (2, 1)], "src bigint, dst bigint"
+    )
+
+
+def _one_edge(spark):
+    # nilpotent adjacency: the Katz series ends after one term
+    return spark.createDataFrame([(0, 1)], "src bigint, dst bigint")
+
+
+def _path10(spark):
+    return _path_graph(spark, 10)
+
+
+def _path4(spark):
+    return _path_graph(spark, 4)
+
+
+# operator -> (run(edges, budget) with check_convergence=True, graph
+# short of the fixpoint at budget 1, graph converged within `budget`)
+_CERTIFIED = {
+    "personalized_pagerank": (
+        lambda e, b: G.personalized_pagerank(
+            e, 0, iterations=b, check_convergence=True, tol=1e-9
+        ),
+        _star, _seed_self_loop, 2,
+    ),
+    "weighted_pagerank": (
+        lambda e, b: G.weighted_pagerank(
+            e.withColumn("weight", F.lit(1.0)),
+            iterations=b, check_convergence=True, tol=1e-9,
+        ),
+        _star, _both_ways_triangle, 2,
+    ),
+    "eigenvector_centrality": (
+        lambda e, b: G.eigenvector_centrality(
+            e, iterations=b, check_convergence=True, tol=1e-9
+        ),
+        _star, _both_ways_triangle, 2,
+    ),
+    "katz_centrality": (
+        lambda e, b: G.katz_centrality(
+            e, iterations=b, check_convergence=True, tol=1e-9
+        ),
+        _star, _one_edge, 2,
+    ),
+    "hits": (
+        lambda e, b: G.hits(e, iterations=b, check_convergence=True, tol=1e-9),
+        _star, _both_ways_triangle, 2,
+    ),
+    "bfs_hops": (
+        lambda e, b: G.bfs_hops(e, [0], max_iter=b, check_convergence=True),
+        _path10, _path4, 10,
+    ),
+    "closeness_centrality": (
+        lambda e, b: G.closeness_centrality(
+            e, max_iter=b, check_convergence=True
+        ),
+        _path10, _path4, 10,
+    ),
+    "shortest_paths": (
+        lambda e, b: G.shortest_paths(
+            e.withColumn("cost", F.lit(1)), 0,
+            iterations=b, check_convergence=True,
+        ),
+        _path10, _path4, 10,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CERTIFIED))
+def test_certificate_raises_at_budget_one_and_silent_when_converged(spark, name):
+    run, short, converged, budget = _CERTIFIED[name]
+    with pytest.raises(ConvergenceError, match=name):
+        run(short(spark), 1)
+    run(converged(spark), budget).collect()

@@ -294,21 +294,36 @@ def test_right_size_keyed_floor_and_noop(spark):
     the 2-partition floor (ADVICE r11: the floor case must right-size
     even when defaultParallelism itself is 2), keeps a frame with
     unknown stats untouched, and never squeezes a frame whose
-    size-derived target reaches one-task-per-core."""
+    size-derived target reaches one-task-per-core. Its result is
+    persisted exactly once: registered for release_persisted(), while
+    a cached input that keeps its partitioning comes back as is."""
+    from pandrs_spark.frame import _PERSISTED, release_persisted
     from pandrs_spark.operators.util import right_size_keyed
 
     tiny = spark.range(50).selectExpr("id AS k", "id * 2 AS v").repartition(40, "k")
     tiny = tiny.persist()
     tiny.count()  # materialize: InMemoryRelation stats are exact
     try:
+        n = len(_PERSISTED)
         out = right_size_keyed(tiny, "k")
         assert out is not tiny
         assert out.rdd.getNumPartitions() == 2
-        # unknown stats (RDD-backed plan): no-op
+        assert len(_PERSISTED) == n + 1 and _PERSISTED[-1] is out
+        # unknown stats (RDD-backed plan): no-op, but persisted
         unk = spark.createDataFrame(spark.sparkContext.parallelize([(1, 2)]), "k int, v int")
         assert right_size_keyed(unk, "k") is unk
-        # frame whose size-derived target reaches one-task-per-core
-        # (forced via bytes_per_task=1): no-op, keeps AQE sizing
-        assert right_size_keyed(tiny, "k", bytes_per_task=1) is tiny
+        assert unk.is_cached and _PERSISTED[-1] is unk
+        # frame whose plan-estimated size (8 bytes/row, stats only, no
+        # job) puts the size-derived target above one task per core:
+        # no-op, keeps AQE sizing; persisted once
+        dp = spark.sparkContext.defaultParallelism
+        big = spark.range(dp << 22)
+        n = len(_PERSISTED)
+        assert right_size_keyed(big, "id") is big
+        assert big.is_cached and len(_PERSISTED) == n + 1
+        # already cached and not repartitioned: not persisted again
+        assert right_size_keyed(big, "id") is big
+        assert len(_PERSISTED) == n + 1
     finally:
         tiny.unpersist()
+        release_persisted()

@@ -59,6 +59,8 @@ def _graph_case(fn_name, *args, **kw):
         e = _edges(spark)
         if fn_name == "shortest_paths":
             e = e.withColumn("cost", (F.col("src") + F.col("dst")) % 3 + 1)
+        elif fn_name == "weighted_pagerank":
+            e = e.withColumn("weight", (F.col("src") % 2 + 1).cast("double"))
         return getattr(G, fn_name)(e, *args, **kw)
 
     return build
@@ -128,8 +130,14 @@ def _case_sort_positions(spark):
 
 CASES = {
     "connected_components": _graph_case("connected_components"),
+    # zero budget: the returned labels are the initial persisted table
+    "connected_components_zero_budget": _graph_case(
+        "connected_components", max_iter=0
+    ),
     "strongly_connected_components": _graph_case("strongly_connected_components"),
     "pagerank": _graph_case("pagerank", iterations=3),
+    "personalized_pagerank": _graph_case("personalized_pagerank", 1, iterations=3),
+    "weighted_pagerank": _graph_case("weighted_pagerank", iterations=3),
     "bfs_hops": _graph_case("bfs_hops", [1]),
     "triangle_count": _graph_case("triangle_count"),
     "clustering_coefficient": _graph_case("clustering_coefficient"),
@@ -141,6 +149,7 @@ CASES = {
     "shortest_paths": _graph_case("shortest_paths", 1, iterations=4),
     "betweenness_centrality": _graph_case("betweenness_centrality"),
     "louvain": _graph_case("louvain", iterations=2),
+    "louvain_zero_budget": _graph_case("louvain", iterations=0),
     "kcore": _graph_case("kcore", k=2, n_iter=4),
     "dbscan_2d": _case_dbscan,
     "local_outlier_factor": _case_lof,
