@@ -1528,11 +1528,37 @@ def kcore(
     the shrinking edge set — the standard distributed peeling shape
     (vertex-centric k-core, e.g. Quick et al.); no driver-side graph.
     Reference scope: graph algorithms tier (src/graph/).
+
+    Degree first: each round materializes the degree table once
+    (eager local checkpoint) and asks it whether any vertex has
+    degree < k. If none does, that answer is both the fixpoint test
+    and the certificate, and the loop stops: peeling is monotone, so
+    every remaining round would be the identity and the result equals
+    the unrolled ``n_iter`` rounds. Otherwise the round peels against
+    ``deg >= k`` from the same table, and the peeled edge set is
+    truncated (``localCheckpoint``): each round references it three
+    times (degree aggregate + both broadcast builds), so untruncated
+    lineage would replay prior rounds with ~3^r fan-out. The last
+    degree table is the result, so the output adds no aggregate of its
+    own. With ``check_convergence=False`` the round after the budget
+    only computes that table and skips the check.
     """
     cur = symmetrize(edges, src, dst).localCheckpoint(eager=False)
-    n_edges = cur.count()
-    for i in range(n_iter):
-        deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("__d__"))
+    for i in range(n_iter + 1):
+        deg = (
+            cur.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("__d__"))
+            .localCheckpoint(eager=True)
+        )
+        if i == n_iter and not check_convergence:
+            break
+        if deg.filter(F.col("__d__") < k).isEmpty():
+            break
+        if i == n_iter:
+            raise ConvergenceError(
+                f"kcore: peel still removing vertices after {n_iter} "
+                "rounds — raise n_iter (peel depth exceeds the budget)"
+            )
         keep = deg.filter(F.col("__d__") >= k).select("src")
         cur = (
             cur.join(F.broadcast(keep), "src")
@@ -1540,41 +1566,10 @@ def kcore(
                 F.broadcast(keep.withColumnRenamed("src", "dst")), "dst"
             )
             .select("src", "dst")
+            .localCheckpoint(eager=False)
         )
-        # Each round references `cur` three times (degree agg + both
-        # broadcast builds), so un-truncated lineage RE-EXECUTES prior
-        # rounds with ~3^r fan-out — the old every-4 cadence paid up to
-        # dozens of subtree replays per window (round 11, measured:
-        # 49 jobs / 13 s of driver re-planning at sf0.1). Truncate
-        # every round; the count doubles as the materializing action
-        # AND the fixpoint detector: peeling is monotone, so a round
-        # that removes no edge is the fixpoint and every remaining
-        # round is the identity — results are bit-identical to running
-        # the full budget.
-        cur = cur.localCheckpoint(eager=False)
-        new_edges = cur.count()
-        if new_edges == n_edges:
-            break
-        n_edges = new_edges
-    if check_convergence:
-        # peeling reached its fixpoint iff one more round removes
-        # nothing: every surviving vertex already has degree >= k
-        cur = cur.localCheckpoint(eager=True)
-        still_peeling = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("__d__"))
-            .filter(F.col("__d__") < k)
-            .limit(1)
-            .count()
-        )
-        if still_peeling:
-            raise ConvergenceError(
-                f"kcore: peel still removing vertices after {n_iter} "
-                "rounds — raise n_iter (peel depth exceeds the budget)"
-            )
-    return (
-        cur.groupBy(F.col("src").alias("id"))
-        .agg(F.count(F.lit(1)).alias("core_degree"))
+    return deg.select(
+        F.col("src").alias("id"), F.col("__d__").alias("core_degree")
     )
 
 

@@ -883,6 +883,8 @@ def ansari_bradley_test(
     Returns 1 row: (n1, n2, ab_t_norm, z) where ab_t_norm = T₁/N with
     T₁ the sample-1 score sum, and z uses the exact tie-conditional
     moments E[T₁] = n1·Σs/N, Var[T₁] = n1·n2·(N·Σs² − (Σs)²)/(N²(N−1)).
+    When every value is tied the variance is 0 and z is NULL (under
+    ANSI a zero divisor would raise ``DIVIDE_BY_ZERO``).
     """
     from pandrs_spark.functions.deterministic import quantize
     from pandrs_spark.operators.windows import global_prefix_counts
@@ -949,8 +951,8 @@ def ansari_bradley_test(
         "n2",
         "t1 AS ab_t_norm",
         "(t1 - n1 * sbar) / "
-        "SQRT(n1 * n2 * (nn * ss2 - sbar * nn * sbar * nn) "
-        "/ (CAST(nn AS DOUBLE) * nn * (nn - 1))) AS z",
+        "NULLIF(SQRT(n1 * n2 * (nn * ss2 - sbar * nn * sbar * nn) "
+        "/ (CAST(nn AS DOUBLE) * nn * (nn - 1))), 0) AS z",
     )
 
 

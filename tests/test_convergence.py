@@ -144,6 +144,24 @@ def test_kcore_convergence_certificate(spark):
     assert len(out) == 3
 
 
+def test_kcore_certificate_at_exact_peel_depth(spark):
+    """A budget equal to the peel depth certifies; one round less
+    raises. K4 plus the tail 4-5-6-7 under k=2 peels 7, 6, 5 in three
+    rounds."""
+    import pytest
+
+    from pandrs_spark.operators.graph import ConvergenceError, kcore
+
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6), (6, 7)],
+        "src long, dst long",
+    )
+    out = kcore(edges, k=2, n_iter=3, check_convergence=True).collect()
+    assert {r["id"]: r["core_degree"] for r in out} == {1: 3, 2: 3, 3: 3, 4: 3}
+    with pytest.raises(ConvergenceError, match="kcore"):
+        kcore(edges, k=2, n_iter=2, check_convergence=True)
+
+
 def _star(spark):
     # hub 0 <-> leaves 1..7: every fixed-round method moves a lot on
     # its first round

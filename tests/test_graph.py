@@ -330,6 +330,65 @@ def test_kcore_peels_below_k(spark):
     assert kcore(edges, k=4, n_iter=6).count() == 0
 
 
+def _kcore_unrolled(edges, k, n_iter):
+    """Hand-unrolled reference: ``n_iter`` synchronous peel rounds on
+    the undirected closure (self-loops dropped), then each surviving
+    vertex's degree."""
+    e = {(a, b) for a, b in edges if a != b} | {(b, a) for a, b in edges if a != b}
+    for _ in range(n_iter):
+        deg = {}
+        for a, _b in e:
+            deg[a] = deg.get(a, 0) + 1
+        e = {(a, b) for a, b in e if deg[a] >= k and deg[b] >= k}
+    deg = {}
+    for a, _b in e:
+        deg[a] = deg.get(a, 0) + 1
+    return deg
+
+
+# K4 on {1,2,3,4} plus the tail 4-5-6-7: under k=2 the tail peels one
+# vertex per round (7, then 6, then 5), so the peel depth is 3
+_K4_TAIL = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6), (6, 7)]
+
+
+def test_kcore_short_budget_equals_unrolled_rounds(spark):
+    """Without the certificate, a budget short of the peel depth
+    returns exactly the state after ``n_iter`` rounds — no early
+    stop, no extra round."""
+    from pandrs_spark.operators.graph import kcore
+
+    edges = spark.createDataFrame(_K4_TAIL, "src long, dst long")
+    for n_iter in range(5):
+        got = {
+            r["id"]: r["core_degree"]
+            for r in kcore(edges, k=2, n_iter=n_iter).collect()
+        }
+        assert got == _kcore_unrolled(_K4_TAIL, 2, n_iter), n_iter
+    assert len(_kcore_unrolled(_K4_TAIL, 2, 2)) == 5  # vertex 5 still in
+
+
+def test_kcore_empty_graph(spark):
+    from pandrs_spark.operators.graph import kcore
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    assert kcore(edges, k=2, n_iter=3, check_convergence=True).collect() == []
+    assert kcore(edges, k=2, n_iter=0).collect() == []
+
+
+def test_kcore_graph_already_at_its_core(spark):
+    """A graph that is its own k-core passes the certificate on the
+    first degree table, even with no peel budget at all."""
+    from pandrs_spark.operators.graph import kcore
+
+    k4 = spark.createDataFrame(_K4_TAIL[:6], "src long, dst long")
+    for n_iter in (0, 3):
+        out = kcore(k4, k=3, n_iter=n_iter, check_convergence=True)
+        assert out.columns == ["id", "core_degree"]
+        assert {r["id"]: r["core_degree"] for r in out.collect()} == {
+            1: 3, 2: 3, 3: 3, 4: 3
+        }
+
+
 def test_neighborhood_jaccard_exact(spark):
     from pandrs_spark.operators.graph import neighborhood_jaccard
 

@@ -384,6 +384,19 @@ def test_ansari_bradley_symmetric_null(spark):
     assert r["z"] == pytest.approx(0.0, abs=1e-9)
 
 
+def test_ansari_bradley_all_tied_has_null_z(spark):
+    """All values tied: the tie-conditional variance is 0, so z is NULL
+    rather than a DIVIDE_BY_ZERO under ANSI. Every rank shares the
+    block-average score (1+2+3+4+4+3+2+1)/8 = 2.5, so T1/N = 5*2.5/8."""
+    from pandrs_spark.operators.hypothesis import ansari_bradley_test
+
+    df = _df(spark, [(0.0, "a")] * 5 + [(0.0, "b")] * 3)
+    r = ansari_bradley_test(df, "value", "grp", "a", "b").first()
+    assert (r["n1"], r["n2"]) == (5, 3)
+    assert r["ab_t_norm"] == pytest.approx(1.5625, abs=1e-9)
+    assert r["z"] is None
+
+
 def _cucconi_brute(xs, ys):
     """Brute-force Cucconi with midranks (Marozzi 2009 formulas)."""
     pooled = sorted([(v, 0) for v in xs] + [(v, 1) for v in ys])

@@ -209,6 +209,114 @@ def test_loader_footer_dispatch_leaves_real_bigint_ts_alone(spark, tmp_path):
     assert [r["ts"] for r in df2.collect()] == ts
 
 
+def _jobs_run_by(spark, fn):
+    """Run ``fn`` under a fresh job group; return (its result, the
+    number of Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_reuses_schema_of_unchanged_file(spark, tmp_path):
+    """A repeat load of an unchanged table skips schema inference: no
+    Spark job at all, the same schema and the same rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pandrs_spark.catalog import load_table
+
+    pq.write_table(
+        pa.table({"k": pa.array([1, 2, 3], pa.int64()),
+                  "s": pa.array(["x", None, "z"])}),
+        str(tmp_path / "t.parquet"),
+    )
+    first, first_jobs = _jobs_run_by(
+        spark, lambda: load_table(spark, str(tmp_path), "t")
+    )
+    again, again_jobs = _jobs_run_by(
+        spark, lambda: load_table(spark, str(tmp_path), "t")
+    )
+    assert first_jobs >= 1  # inference reads the footer in a job
+    assert again_jobs == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_load_table_sees_rewritten_schema(spark, tmp_path):
+    """Overwriting a table file with a different schema changes its
+    identity, so the next load infers again instead of reusing the
+    stale schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pandrs_spark.catalog import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(
+        pa.table({"k": pa.array([1, 2], pa.int64()),
+                  "s": pa.array(["a", "b"])}),
+        path,
+    )
+    assert load_table(spark, str(tmp_path), "t").columns == ["k", "s"]
+    pq.write_table(
+        pa.table({"k": pa.array([7, 8, 9], pa.int32()),
+                  "v": pa.array([0.5, 1.5, 2.5])}),
+        path,
+    )
+    df, jobs = _jobs_run_by(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    assert jobs >= 1
+    assert df.dtypes == [("k", "int"), ("v", "double")]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (7, 0.5), (8, 1.5), (9, 2.5)
+    ]
+
+
+def test_load_table_nanos_conversion_on_reused_schema(spark, tmp_path):
+    """The TIMESTAMP(NANOS) events layout converts the same way when
+    the schema is reused, and the nanosAsLong conf is left unset."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pandrs_spark.catalog import load_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    ts = [
+        datetime.datetime(2024, 1, 1, 12, 0, 0, 123456),
+        datetime.datetime(2024, 1, 2, 13, 30, 0, 654321),
+    ]
+    pq.write_table(
+        pa.table({"event_id": pa.array([1, 2], pa.int64()),
+                  "ts": pa.array(ts, pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+    )
+    prev = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        first = load_table(spark, str(tmp_path), "events")
+        again, jobs = _jobs_run_by(
+            spark, lambda: load_table(spark, str(tmp_path), "events")
+        )
+        assert spark.conf.get(key, None) is None
+        assert jobs == 0
+        assert again.dtypes == first.dtypes
+        assert dict(again.dtypes)["ts"] == "timestamp"
+        assert sorted(r["ts"] for r in again.collect()) == ts
+        assert sorted(again.collect()) == sorted(first.collect())
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+
+
 def test_xlsx_multi_sheet_roundtrip(spark, tmp_path):
     """Multi-sheet workbook surface (reference src/io/excel.rs:480,823):
     list sheets in workbook order, read by name and by index, per-sheet
@@ -527,3 +635,37 @@ def test_compact_files_reduces_count_preserves_rows(spark, tmp_path):
     back = spark.read.parquet(dest)
     assert back.count() == 10000
     assert back.agg(F.sum("v")).first()[0] == 2 * sum(range(10000))
+
+
+def test_list_data_files_matches_recursive_listing(spark, tmp_path):
+    """The listStatus walk returns exactly what a recursive listFiles
+    walk does, under the same leaf-name filter: partition
+    subdirectories are descended, _SUCCESS, .crc checksums and hidden
+    files are skipped, and the output is sorted."""
+    from pyspark.sql import functions as F
+
+    from pandrs_spark.sources.io import list_data_files
+
+    root = tmp_path / "parted"
+    spark.range(60).select(
+        (F.col("id") % 3).alias("p"), (F.col("id") % 2).alias("q"), "id"
+    ).repartition(2).write.partitionBy("p", "q").parquet(str(root))
+    (root / "p=0" / ".hidden").write_text("x")
+    (root / "p=1" / "q=1" / "_meta").write_text("x")
+    names = {f.name for f in root.rglob("*")}
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(str(root))
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    ref = []
+    it = fs.listFiles(path, True)
+    while it.hasNext():
+        st = it.next()
+        if not st.getPath().getName().startswith(("_", ".")):
+            ref.append((st.getPath().toString(), int(st.getLen())))
+
+    got = list_data_files(spark, str(root))
+    assert got == sorted(ref)
+    assert len(got) >= 6  # every (p, q) partition holds a data file
+    assert all(p.endswith(".parquet") for p, _ in got)
